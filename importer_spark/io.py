@@ -48,12 +48,10 @@ def widen_narrow_scan(df: DataFrame, path: str) -> DataFrame:
     serializes that work on one core. Production inputs split into
     thousands of scan tasks and must NOT pay a blanket repartition, so
     the round-robin spread applies only when the on-disk size says the
-    scan cannot reach the session's parallelism on its own
-    (bytes / 128 MB-split estimate < defaultParallelism). Deterministic
-    and value-neutral: repartition() round-robin sorts its input first
+    scan cannot reach the width it would be spread to on its own
+    (bytes / 128 MB-split estimate < that width). Deterministic and
+    value-neutral: repartition() round-robin sorts its input first
     (SPARK-23207), and only row placement changes, never row content."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
     try:
         if os.path.isdir(path):
             size = sum(
@@ -65,8 +63,6 @@ def widen_narrow_scan(df: DataFrame, path: str) -> DataFrame:
             size = os.path.getsize(path)
     except OSError:
         return df
-    if max(1, size // _WIDEN_SPLIT_BYTES) >= target:
-        return df
     # Half the session's parallelism, not all of it (r11, guide §2.2/§2.6):
     # the spread exists so heavy per-row scan work stops serializing on one
     # task, and a width-W sweep (W ∈ {4,8,16,32} on the five heaviest wide
@@ -76,7 +72,10 @@ def widen_narrow_scan(df: DataFrame, path: str) -> DataFrame:
     # runs ALONE; under the engine's concurrent scheduler they run in waves
     # anyway, so the extra tasks are pure per-task/shuffle-block overhead
     # (M×R block growth). Still session-derived — never a local constant.
-    return df.repartition(max(2, target // 2))
+    width = max(2, df.sparkSession.sparkContext.defaultParallelism // 2)
+    if max(1, size // _WIDEN_SPLIT_BYTES) >= width:
+        return df
+    return df.repartition(width)
 
 
 def normalize_column_name(name: str) -> str:

@@ -8,8 +8,6 @@ buckets; within-bucket scoring then mirrors the brute-force formula.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -578,8 +576,7 @@ MB_THRESHOLD = 1.05  # ratio-margin cut: cos must beat the neighborhood mean
 # log2/ceil float edge cases), emitted into the oracle SQL as a CASE
 # ladder over the same plane literals (prefix-stable: plane j depends only
 # on j, so a p-plane bucket is the low-p-bits prefix of the max-plane
-# bucket). SPARK_GRAFT_MARGIN_PLANES pins a fixed p on BOTH engines
-# (import-read, as before) for reproducing old certifications.
+# bucket).
 MB_MIN_PLANES = 4
 MB_MAX_PLANES = 14  # 16384 buckets — linear-regime pops up to ~4M vectors
 # 250/bucket, not 10^3: the 100x sweep measured p=9 (~195/bucket) beating
@@ -587,25 +584,12 @@ MB_MAX_PLANES = 14  # 16384 buckets — linear-regime pops up to ~4M vectors
 # quadratic still dominates at 10^3. 250 keeps every driver/bench scale
 # (<= 4000 vectors) at the certified p=4 while the sf1 gate gets p=7.
 MB_TARGET_BUCKET = 250
-_MB_ENV_PLANES = os.environ.get("SPARK_GRAFT_MARGIN_PLANES")
-if _MB_ENV_PLANES is not None:
-    # Validated at import (r9 ADVICE): an out-of-range pin would silently
-    # produce probe buckets no row can occupy (p below the probe count) or
-    # plane indices past the pool (p above MB_MAX_PLANES).
-    _MB_ENV_PLANES = int(_MB_ENV_PLANES)
-    if not (1 <= _MB_ENV_PLANES <= MB_MAX_PLANES):
-        raise ValueError(
-            f"SPARK_GRAFT_MARGIN_PLANES must be in [1, {MB_MAX_PLANES}], "
-            f"got {_MB_ENV_PLANES}"
-        )
 MB_PLANES_POOL = hyperplanes(MB_MAX_PLANES, DIMS)
 
 
 def _mb_adaptive_planes(n: int) -> int:
     """Smallest p in [MB_MIN_PLANES, MB_MAX_PLANES] with n <= target<<p —
     integer comparisons only, the exact ladder `_margin_sql` bakes."""
-    if _MB_ENV_PLANES is not None:
-        return int(_MB_ENV_PLANES)
     p = MB_MIN_PLANES
     while p < MB_MAX_PLANES and n > (MB_TARGET_BUCKET << p):
         p += 1
@@ -613,10 +597,7 @@ def _mb_adaptive_planes(n: int) -> int:
 
 
 def _mb_planes_case_sql() -> str:
-    """The same ladder as a DuckDB CASE over COUNT(*) — or the pinned
-    constant when the env override is set (both engines honor it)."""
-    if _MB_ENV_PLANES is not None:
-        return str(int(_MB_ENV_PLANES))
+    """The same ladder as a DuckDB CASE over COUNT(*)."""
     rungs = " ".join(
         f"WHEN cnt <= {MB_TARGET_BUCKET << p} THEN {p}"
         for p in range(MB_MIN_PLANES, MB_MAX_PLANES)
@@ -629,15 +610,10 @@ def _mb_planes_case_sql() -> str:
 # multiplying candidates by (1 + probes) and recall with them — the knob
 # that buys back what a larger plane count costs. 0 = exact-bucket only
 # (the published certifications); measured at sf0.001: probes 0 -> recall
-# 0.122 of the exhaustive mutual-best truth, probes 4 -> 0.46. Clamped to
-# the EFFECTIVE plane floor (r9 ADVICE: clamping to the constant
-# MB_MIN_PLANES let a pinned p < 4 produce probe buckets no row can
-# occupy): the adaptive ladder guarantees p >= MB_MIN_PLANES, and an env
-# pin fixes p exactly, so the floor is whichever applies.
-_MB_FLOOR_PLANES = _MB_ENV_PLANES if _MB_ENV_PLANES is not None else MB_MIN_PLANES
-MB_PROBE_BITS = min(
-    max(0, int(os.environ.get("SPARK_GRAFT_MARGIN_PROBES", "0"))), _MB_FLOOR_PLANES
-)
+# 0.122 of the exhaustive mutual-best truth, probes 4 -> 0.46. At most
+# MB_MIN_PLANES: the ladder guarantees p >= MB_MIN_PLANES, so every probe
+# bit flips a plane the bucket key carries.
+MB_PROBE_BITS = 0
 
 
 def _margin_sql() -> str:
@@ -734,8 +710,7 @@ def margin_bitext_mine(spark, sf_dir):
     (_mb_adaptive_planes: smallest p with COUNT(*) <= MB_TARGET_BUCKET·2^p,
     target 250/bucket — r8 verdict #2: the fixed
     4-plane default went per-bucket-quadratic at only 10× driver scale),
-    so per-bucket population stays ~10^3 as the corpus grows;
-    SPARK_GRAFT_MARGIN_PLANES pins a fixed p on both engines.
+    so per-bucket population stays ~10^3 as the corpus grows.
 
     Float determinism: cosines are rounded to 9dp and summed as
     DECIMAL(18,9) (the BM25 convention — order can never flip a rank);

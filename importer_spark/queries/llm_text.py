@@ -4,8 +4,6 @@ operators: language-ID, quality scoring, token counting, fingerprinting).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from importer_spark.io import Tables
@@ -333,19 +331,11 @@ WHERE bit_count(CAST(xor(ha, hb) AS BIGINT)) <= {_SIMHASH_HAM_K}
 """
 
 
-# Production dial values (r9 verdict #1): the bucket cap + SNM window are
-# read at IMPORT time (the margin-planes convention in llm_similarity) so
-# the Spark plan and the oracle SQL baked at registration can never
-# disagree about the dial — a per-call env read could desync the two
-# engines between registration and execution.
-_SH_CAP = int(os.environ.get("SPARK_GRAFT_SIMHASH_BUCKET_CAP", "64"))
-_SH_SNM = int(os.environ.get("SPARK_GRAFT_SIMHASH_SNM_WINDOW", "8"))
-if _SH_CAP < 1:
-    raise ValueError(f"SPARK_GRAFT_SIMHASH_BUCKET_CAP must be >= 1, got {_SH_CAP}")
-if _SH_SNM != 0 and _SH_SNM < 2:
-    raise ValueError(
-        f"SPARK_GRAFT_SIMHASH_SNM_WINDOW must be 0 (disable) or >= 2, got {_SH_SNM}"
-    )
+# Production dial values (r9 verdict #1): module constants, so the Spark
+# plan and the oracle SQL baked at registration always agree. A deployer
+# tunes through `_simhash_pairs(bucket_cap=, snm_window=)`.
+_SH_CAP = 64
+_SH_SNM = 8
 
 
 def _simhash_capped_sql() -> str:
@@ -357,10 +347,7 @@ def _simhash_capped_sql() -> str:
     ambiguity — so DuckDB re-derives it independently of Spark's
     lead()-struct formulation (operators.dedup.snm_chain_pairs).
     Orientation matches snm_chain_pairs: id_a = min(doc_id)."""
-    snm_cand = ""
-    union = ""
-    if _SH_SNM >= 2:
-        snm_cand = f""",
+    snm_cand = f""",
 snm_rows AS (
   SELECT band, band_val, doc_id, simhash,
          ROW_NUMBER() OVER (PARTITION BY band, band_val
@@ -376,7 +363,7 @@ snm_cand AS (
     ON x.band = y.band AND x.band_val = y.band_val
    AND y.rn > x.rn AND y.rn <= x.rn + {_SH_SNM - 1}
 )"""
-        union = "\n    UNION ALL SELECT id_a, ha, id_b, hb FROM snm_cand"
+    union = "\n    UNION ALL SELECT id_a, ha, id_b, hb FROM snm_cand"
     return f"""
 WITH sh AS ({{base}}),
 bands AS (
@@ -499,14 +486,13 @@ def simhash_bucket_capped(spark, sf_dir):
     probe (r6 verdict #2): the 100× exponent 1.51 was measured as
     candidate-BUCKET growth (clone buckets grow quadratically in members),
     so a duplicate-heavy shard pays unbounded candidate verification. With
-    the cap (SPARK_GRAFT_SIMHASH_BUCKET_CAP, import-read, default 64) any
-    (band, band_val) bucket holding more docs is routed to the overflow
-    relation instead of the self-join — candidate work bounded by cap²/2
-    per bucket — and the sorted-neighborhood recovery pass
-    (SPARK_GRAFT_SIMHASH_SNM_WINDOW, import-read, default 8; 0 disables)
-    re-mines the routed-out buckets at O(bucket×window), closing most of
-    the recall hole bucket-drop opened (RECALL_CURVE.json: doc-flag recall
-    0.988 at cap 64 vs 0.258 bucket-drop on Zipf clone data; clones sort
+    the cap (`_SH_CAP`, 64) any (band, band_val) bucket holding more docs
+    is routed to the overflow relation instead of the self-join —
+    candidate work bounded by cap²/2 per bucket — and the sorted-
+    neighborhood recovery pass (`_SH_SNM`, window 8) re-mines the
+    routed-out buckets at O(bucket×window), closing most of the recall
+    hole bucket-drop opened (RECALL_CURVE.json: doc-flag recall 0.988 at
+    cap 64 vs 0.258 bucket-drop on Zipf clone data; clones sort
     adjacently by fingerprint value so a small window recovers them).
 
     Oracle-certified since r10 (r9 verdict #1: the config a 100-TB user

@@ -7,8 +7,6 @@ fct_inventory_history.sql:39-47).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -159,8 +157,8 @@ def inventory_deltas(spark, sf_dir):
 # validity intervals via LEAD, facts join the covering interval). Default
 # on every axis where it is affordable (r9 ADVICE, medium): an oracle that
 # shares the engine's as-of algorithm would certify a shared conceptual
-# bug silently. Quadratic on a hot part_key, so the SKEW axis selects the
-# as-of form below via SPARK_GRAFT_PIT_ORACLE=asof (the r8 skew gate's
+# bug silently. Quadratic on a hot part_key, so the SKEW axis's gate run
+# swaps in the as-of form below (tools/run_local_gate.py; the r8 skew gate's
 # DuckDB side spilled 22 GiB on this form and died while the engine
 # finished 5.8M rows in 44 s). tests/test_pit_oracle_crosscheck.py proves
 # the two oracle forms identical in DuckDB at the driver scales each
@@ -252,18 +250,7 @@ FROM filled
 WHERE kind = 1 AND pv IS NOT NULL
 """
 
-# Oracle selection per axis (import-read, like the margin-planes pin): the
-# definitional interval join is the default independent check; the skew
-# axis sets SPARK_GRAFT_PIT_ORACLE=asof in tools/republish_gates.sh
-# because the interval join is quadratic on a hot part key.
-_PIT_SQL = (
-    _PIT_SQL_ASOF
-    if os.environ.get("SPARK_GRAFT_PIT_ORACLE", "interval") == "asof"
-    else _PIT_SQL_INTERVAL
-)
-
-
-@query("point_in_time_price", oracle=_PIT_SQL)
+@query("point_in_time_price", oracle=_PIT_SQL_INTERVAL)
 def point_in_time_price(spark, sf_dir):
     """SCD2 point-in-time lookup — the temporal-snapshot pattern every
     warehouse needs (reference: fct_product_pricing_history tracks price
@@ -282,8 +269,8 @@ def point_in_time_price(spark, sf_dir):
     a part's first version drop (inner semantics), matching the oracle.
     TWO oracle forms (r9 ADVICE): the definitional interval join is the
     default — an algorithm-independent check — and the union-and-window
-    as-of twin runs only on the skew axis (SPARK_GRAFT_PIT_ORACLE=asof),
-    where the interval join is quadratic on a hot part_key (the r8 skew
+    as-of twin runs only on the skew axis (tools/run_local_gate.py swaps
+    it in), where the interval join is quadratic on a hot part_key (the r8 skew
     gate's DuckDB side spilled 22 GiB and died). The two forms are proven
     identical in DuckDB at the driver scales each pytest run
     (tests/test_pit_oracle_crosscheck.py)."""

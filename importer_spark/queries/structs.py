@@ -377,6 +377,9 @@ def embedding_near_dups_incremental(spark, sf_dir):
     return cosine_pairs_probe(batch, e, "vec_id", "emb", threshold=0.45)
 
 
+_EMIT_CAP = 8  # top-K matches kept per probe
+
+
 @query("embedding_probe_emit_capped", catalog=False)
 def embedding_probe_emit_capped(spark, sf_dir):
     """The production emit-cap dial over the same incremental probe
@@ -384,7 +387,7 @@ def embedding_probe_emit_capped(spark, sf_dir):
     ~2.3 is OUTPUT-driven — emitted pairs grow 4.01×/doubling on the
     clone-heavy scaled data (measured, commit 12316cd) — so a duplicate-
     heavy shard materializes an unbounded pair set. With the cap
-    (SPARK_GRAFT_PROBE_EMIT_CAP, read per call, default 8) each probe
+    (`_EMIT_CAP`, 8; `cosine_pairs_probe(max_pairs_per_probe=)`) each probe
     keeps only its cap highest-cosine matches — output bounded by
     cap·|batch| regardless of corpus duplication — and saturated probes
     surface in the overflow relation (returned here as per-pair rows; the
@@ -392,17 +395,14 @@ def embedding_probe_emit_capped(spark, sf_dir):
     pinned by tests/test_emit_caps.py). Diagnostic (no oracle): the capped
     answer is a deliberate top-K subset, not the SQL-expressible full
     pair set — the uncapped twin above stays the certified catalog entry."""
-    import os
-
     from importer_spark.operators.similarity import (
         as_double_array,
         cosine_pairs_probe,
     )
 
-    cap = int(os.environ.get("SPARK_GRAFT_PROBE_EMIT_CAP", "8"))
     t = Tables(spark, sf_dir)
     e = t.embeddings.select("vec_id", as_double_array(F.col("embedding")).alias("emb"))
     batch = e.filter(F.col("vec_id") % 5 == 0)
     return cosine_pairs_probe(
-        batch, e, "vec_id", "emb", threshold=0.45, max_pairs_per_probe=cap
+        batch, e, "vec_id", "emb", threshold=0.45, max_pairs_per_probe=_EMIT_CAP
     )

@@ -287,3 +287,15 @@ def test_keep_best_refinement_under_capped_snm_pairs(spark):
     # the binding cap must actually bind on this corpus for the test to
     # exercise the interesting case
     assert capped.count() < uncapped.count()
+
+
+def test_simhash_oracle_bakes_the_dial_constants():
+    """The registered oracle SQL must carry the module's cap/window — the
+    literal the SQL CASE uses is the one the Spark plan uses."""
+    from importer_spark.queries import ORACLES
+    from importer_spark.queries.llm_text import _SH_CAP, _SH_SNM
+
+    sql = ORACLES["simhash_bucket_capped"]
+    assert f"bucket_size <= {_SH_CAP}" in sql
+    assert f"bucket_size > {_SH_CAP}" in sql
+    assert f"y.rn <= x.rn + {_SH_SNM - 1}" in sql

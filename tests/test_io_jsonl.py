@@ -1,4 +1,5 @@
-"""JSONL round-trip: export sink (S6) + null-forcing reader (S4/X5)."""
+"""JSONL round-trip: export sink (S6) + null-forcing reader (S4/X5); Tables
+handles and the scan-widening guard."""
 
 from __future__ import annotations
 
@@ -50,3 +51,19 @@ def test_tables_missing_dir_raises_path_not_found(spark):
     t = Tables(spark, "/root/testdata/sf-does-not-exist")
     with pytest.raises(AnalysisException):
         t.orders.count()
+
+
+def test_widen_skips_scan_already_at_spread_width(spark, tmp_path, monkeypatch):
+    """The skip threshold is the width the guard would repartition to
+    (half the session parallelism), not the full parallelism: a scan
+    estimated at 3 splits on local[4] already reaches width 2."""
+    from importer_spark import io
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(100).write.parquet(path)
+    df = spark.read.parquet(path)
+    size = sum(f.stat().st_size for f in (tmp_path / "t.parquet").rglob("*"))
+    monkeypatch.setattr(io, "_WIDEN_SPLIT_BYTES", size // 3)
+    assert size // io._WIDEN_SPLIT_BYTES == 3
+    assert spark.sparkContext.defaultParallelism == 4
+    assert io.widen_narrow_scan(df, path) is df

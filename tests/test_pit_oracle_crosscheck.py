@@ -90,15 +90,10 @@ def test_pit_oracle_forms_agree_under_nulls():
 
 
 def test_registered_oracle_defaults_to_interval_form():
-    """Without SPARK_GRAFT_PIT_ORACLE the registered oracle must be the
-    algorithm-INDEPENDENT definitional form — the whole point of the
-    split (the as-of form shares the engine's formulation and would
-    certify a shared conceptual bug silently)."""
-    import os
+    """The registered oracle must be the algorithm-INDEPENDENT definitional
+    form — the whole point of the split (the as-of form shares the
+    engine's formulation and would certify a shared conceptual bug
+    silently). Only the skew-axis gate run swaps in the as-of form."""
+    from importer_spark.queries import ORACLES
 
-    from importer_spark.queries.pricing import _PIT_SQL
-
-    if os.environ.get("SPARK_GRAFT_PIT_ORACLE", "interval") == "asof":
-        assert _PIT_SQL == _PIT_SQL_ASOF
-    else:
-        assert _PIT_SQL == _PIT_SQL_INTERVAL
+    assert ORACLES["point_in_time_price"] == _PIT_SQL_INTERVAL

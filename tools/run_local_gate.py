@@ -24,6 +24,9 @@ the Spark side's rows + seconds, which DID complete) — distinct from
 "fails", because it is evidence about the oracle's cost, not the engine's
 correctness; those queries stay value-certified at the driver scales.
 
+SPARK_GRAFT_PIT_ORACLE=asof checks point_in_time_price against its as-of
+oracle form instead of the definitional interval join (the skew axis).
+
 Usage: python tools/run_local_gate.py [sf_dir] [out_json] [--cpus N]
 """
 
@@ -182,6 +185,17 @@ def main() -> None:
     from importer_spark.session import get_spark
     from tests.conftest import canonical, duck_con
 
+    oracles = dict(ORACLES)
+    if os.environ.get("SPARK_GRAFT_PIT_ORACLE", "interval") == "asof":
+        # Skew axis: the definitional interval-join oracle for
+        # point_in_time_price is quadratic on a hot part key (r8: 22 GiB
+        # DuckDB spill, then death), so this run checks against the as-of
+        # form. tests/test_pit_oracle_crosscheck.py proves the two forms
+        # identical at the driver scales.
+        from importer_spark.queries.pricing import _PIT_SQL_ASOF
+
+        oracles["point_in_time_price"] = _PIT_SQL_ASOF
+
     spark = get_spark(
         app_name="local-gate",
         master=f"local[{cpus}]",
@@ -223,7 +237,7 @@ def main() -> None:
             sdf = QUERIES[name](spark, sf_dir).toPandas()
             t1 = time.perf_counter()
             try:
-                odf = run_oracle_with_timeout(con, ORACLES[name], oracle_timeout_s)
+                odf = run_oracle_with_timeout(con, oracles[name], oracle_timeout_s)
             except (OracleTimeout, OracleResourceExceeded) as oe:
                 seconds[name] = [round(t1 - t0, 3), -1.0]
                 oracle_timeouts[name] = {
