@@ -16,15 +16,17 @@ Commands:
 
 Options: --sf-dir (default /root/testdata/sf0.001), --limit N (default 20,
 0 = no limit), --master (default local[*]); pipeline adds --warehouse DIR
-(required), --mode seed|incremental|auto (default auto: seed when the
-warehouse is empty), --skip-quality.
+(required), --mode seed|incremental|auto (default auto: seed a source whose
+table has no commit yet), --skip-quality.
 
 The reference's surface is an orchestrator CLI (orchestrator.py:580-629:
 sources in priority order, seed/incremental modes, then dbt build + test);
 `pipeline` is that loop composed from this library: run_source_load per
-source, ModelGraph topological build, write marts, quality_manifest suites
-on the BUILT frames. Exit code 1 = a quality gate failed (the dbt-test
-contract); the programmatic API remains importer_spark.queries.QUERIES.
+source into a transaction-log table, ModelGraph topological build over the
+loaded sources, write marts, quality_manifest suites on the WRITTEN marts
+(as dbt tests run against the materialized tables). Exit code 1 = a quality
+gate failed (the dbt-test contract); the programmatic API remains
+importer_spark.queries.QUERIES.
 """
 
 from __future__ import annotations
@@ -115,6 +117,7 @@ def _pipeline(args, out) -> int:
     from importer_spark.plans.pipeline import run_source_load
     from importer_spark.quality_manifest import MANIFEST
     from importer_spark.session import get_spark
+    from importer_spark.txn import TxnTable
 
     spark = get_spark(app_name="importer-spark-pipeline", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
@@ -126,48 +129,52 @@ def _pipeline(args, out) -> int:
         "events": (t.events, ["event_id"], "ts"),
     }
     loads = {}
+    loaded = {}
     for name, (df, keys, cursor) in sources.items():
-        target = os.path.join(args.warehouse, "sources", name)
+        table = TxnTable(spark, os.path.join(args.warehouse, "sources", name))
         mode = args.mode
         if mode == "auto":
-            mode = "incremental" if os.path.exists(target) else "seed"
-        res = run_source_load(spark, df, target, keys=keys, cursor_col=cursor, mode=mode)
+            mode = "seed" if table.latest_version() is None else "incremental"
+        res = run_source_load(spark, df, table.path, keys=keys, cursor_col=cursor, mode=mode)
         loads[name] = {"mode": res.mode, "rows_loaded": res.rows_loaded,
                        "target_rows": res.target_rows}
+        loaded[name] = table.read()
         print(json.dumps({"stage": "source_load", "source": name, **loads[name]}),
               file=out)
 
-    # --- stage 2: model DAG build + mart materialization ------------------
-    outputs = GRAPH.run(spark, args.sf_dir)
+    # --- stage 2: model DAG build over the loaded sources + mart writes ---
+    outputs = GRAPH.run(spark, args.sf_dir, sources=loaded)
     marts = {}
+    written = {}
     try:
         for name, df in outputs.items():
             if not name.startswith("mart_"):
                 continue  # staging/intermediate stay lazy (dbt view layers)
             path = os.path.join(args.warehouse, "marts", name)
             write_replace(df, path)
-            marts[name] = spark.read.parquet(path).count()
+            written[name] = spark.read.parquet(path)
+            marts[name] = written[name].count()
             print(json.dumps({"stage": "mart", "model": name, "rows": marts[name],
                               "path": path}), file=out)
-
-        # --- stage 3: quality suites on the BUILT frames ------------------
-        failed = []
-        checked = 0
-        if not args.skip_quality:
-            from importer_spark.quality import run_suite
-
-            for name in marts:
-                checks = MANIFEST.get(name)
-                if not checks:
-                    continue
-                res = run_suite(outputs[name], checks).collect()
-                checked += len(res)
-                bad = [(r.check_name, r.n_violations) for r in res if not r.passed]
-                failed.extend((name, c, n) for c, n in bad)
-                print(json.dumps({"stage": "quality", "model": name,
-                                  "checks": len(res), "failed": bad}), file=out)
     finally:
         GRAPH.release(outputs)
+
+    # --- stage 3: quality suites on the WRITTEN marts ---------------------
+    failed = []
+    checked = 0
+    if not args.skip_quality:
+        from importer_spark.quality import run_suite
+
+        for name, df in written.items():
+            checks = MANIFEST.get(name)
+            if not checks:
+                continue
+            res = run_suite(df, checks).collect()
+            checked += len(res)
+            bad = [(r.check_name, r.n_violations) for r in res if not r.passed]
+            failed.extend((name, c, n) for c, n in bad)
+            print(json.dumps({"stage": "quality", "model": name,
+                              "checks": len(res), "failed": bad}), file=out)
 
     summary = {
         "stage": "summary",

@@ -1,19 +1,18 @@
 """Readers and writers (sources / sinks).
 
-Covers the reference's table semantics (SURVEY §1.4): merge/upsert by primary
-key, full replace, append, and incremental snapshot-append — implemented on
-plain parquet (Delta/Iceberg would make merge transactional; the dedup-by-key
-rewrite below is the storage-agnostic equivalent).
+Covers the reference's table semantics (SURVEY §1.4): full replace, append
+and incremental snapshot-append on plain parquet, and merge/upsert by primary
+key through the transaction-log table (txn.py), which makes the merge atomic
+and records the load cursor in the same commit.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -353,257 +352,26 @@ def export_jsonl_snapshot(
     out.write.mode("append").json(path)
 
 
-BUCKET_COL = "_kb"
-_MERGE_META = "_merge_meta.json"
-
-
-def _hadoop_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, p, jvm
-
-
-def _read_merge_meta(spark: SparkSession, path: str) -> dict | None:
-    fs, p, jvm = _hadoop_path(spark, f"{path}/{_MERGE_META}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        return json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
-    finally:
-        stream.close()
-
-
-def _write_merge_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    fs, p, _ = _hadoop_path(spark, f"{path}/{_MERGE_META}")
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(meta, sort_keys=True).encode()))
-    finally:
-        out.close()
-
-
-def _bucket_expr(keys: list[str], n_buckets: int):
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
-
-
 def merge_by_key(
     spark: SparkSession,
     source: DataFrame,
     path: str,
     keys: list[str],
     version_col: str | None = None,
-    n_buckets: int = 64,
-    bucket_keys: list[str] | None = None,
-) -> None:
+    txn: dict | None = None,
+) -> int:
     """Upsert-by-primary-key (reference S12: dlt write_disposition="merge",
-    pipelines/quickbooks/pipeline.py:301-347) with partition-pruned cost.
+    pipelines/quickbooks/pipeline.py:301-347) into the transaction-log table
+    at ``path`` — the library's one upsert entry point. Source rows replace
+    matched target rows (with ``version_col``, the higher version wins) and
+    new keys append; ``txn`` is recorded in the same commit (e.g. a load
+    cursor). The commit rewrites only the live files whose key range the
+    batch overlaps (see txn.TxnTable.commit_merge). Returns the committed
+    version."""
+    from importer_spark.txn import TxnTable
 
-    The target is laid out as parquet directory-partitioned by
-    ``_kb = pmod(xxhash64(keys), n_buckets)``; a merge
-    (1) computes the source batch's bucket set (≤ n_buckets ints, one tiny
-        action),
-    (2) reads ONLY those target partitions (directory pruning — unmatched
-        partitions are never scanned),
-    (3) resolves the winning row per key (source wins; with ``version_col``,
-        highest version wins) via a window keyed on the PK, and
-    (4) rewrites only the affected partitions via dynamic partition
-        overwrite, through a staging dir so the write never reads the path
-        it replaces.
-    Untouched partitions keep their exact files — merge cost is proportional
-    to the data in matched buckets, not the table (the reference's merge
-    touches matched PKs only; a daily upsert into a 100 TB snapshot must not
-    rewrite 100 TB). On Delta/Iceberg this becomes a transactional
-    ``MERGE INTO``; semantics are identical.
-
-    ``bucket_keys`` (default: ``keys``) chooses which PK PREFIX the layout
-    hashes. It must be a prefix-subset of ``keys`` so equal PKs always land
-    in the same bucket; bucketing on the leading entity key (e.g. order key
-    for an order-lines table) co-locates each entity's rows, so an update
-    batch touching E entities rewrites ≤ E buckets instead of ≤ E×lines
-    (measured at 10× bench scale: a 40-order correction batch rewrote 42%
-    of the table bucketing on the full (order, line) key vs 15% on the
-    order key alone).
-
-    ``n_buckets`` is fixed at table creation (persisted in a ``_merge_meta``
-    sidecar the parquet reader ignores); later calls use the stored value.
-    A legacy unpartitioned target is migrated in place once via staged
-    rename (old dir is renamed aside before the new one moves in, so every
-    crash window leaves a recoverable directory)."""
-    if bucket_keys is None:
-        bucket_keys = list(keys)
-    if list(keys)[: len(bucket_keys)] != list(bucket_keys):
-        raise ValueError(
-            f"merge_by_key: bucket_keys={bucket_keys} must be a prefix of "
-            f"keys={list(keys)} (equal PKs must share a bucket)"
-        )
-    target = read_parquet_if_exists(spark, path)
-    meta = _read_merge_meta(spark, path) if target is not None else None
-    if meta is not None:
-        if list(meta.get("keys", keys)) != list(keys) or list(
-            meta.get("bucket_keys", meta.get("keys", keys))
-        ) != list(bucket_keys):
-            # The physical layout hashes the ORIGINAL bucket keys; merging
-            # with a different key set would bucket source rows away from
-            # their existing counterparts and silently leave duplicate PKs.
-            raise ValueError(
-                f"merge_by_key: table at {path} was created with keys="
-                f"{meta['keys']} bucket_keys="
-                f"{meta.get('bucket_keys', meta.get('keys'))}, got "
-                f"keys={list(keys)} bucket_keys={list(bucket_keys)} — "
-                "rebuild the table to change its merge key"
-            )
-        n_buckets = int(meta["n_buckets"])
-    src = source.withColumn(
-        BUCKET_COL, _bucket_expr(bucket_keys, n_buckets)
-    ).withColumn("_merge_rank", F.lit(1))
-
-    if target is not None and meta is None:
-        # One-time migration of a pre-bucketing table: full rewrite into the
-        # partitioned layout (unavoidable once), staged + rename-aside swap.
-        tgt = target.withColumn(
-            BUCKET_COL, _bucket_expr(bucket_keys, n_buckets)
-        ).withColumn("_merge_rank", F.lit(2))
-        result = _resolve_winners(src.unionByName(tgt, allowMissingColumns=True), keys, version_col)
-        staging = f"{path}__staging"
-        result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-        fs, p, jvm = _hadoop_path(spark, path)
-        hpath = jvm.org.apache.hadoop.fs.Path
-        old = hpath(f"{path}__old")
-        fs.delete(old, True)
-        if not fs.rename(p, old):
-            raise IOError(f"merge_by_key: failed to move {path} aside")
-        if not fs.rename(hpath(staging), p):
-            fs.rename(old, p)  # roll back; staging retains the new data
-            raise IOError(f"merge_by_key: failed to swap staging dir into {path}")
-        fs.delete(old, True)
-        _write_merge_meta(
-            spark, path,
-            {"n_buckets": n_buckets, "keys": keys, "bucket_keys": bucket_keys},
-        )
-        return
-
-    if target is None:
-        result = _resolve_winners(src, keys, version_col)
-        result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-        _write_merge_meta(
-            spark, path,
-            {"n_buckets": n_buckets, "keys": keys, "bucket_keys": bucket_keys},
-        )
-        return
-
-    affected = sorted(
-        r[0] for r in src.select(BUCKET_COL).distinct().collect()
-    )
-    if not affected:  # empty source batch: nothing to merge
-        return
-    pruned = target.filter(F.col(BUCKET_COL).isin(affected)).withColumn(
-        "_merge_rank", F.lit(2)
-    )
-    result = _resolve_winners(src.unionByName(pruned, allowMissingColumns=True), keys, version_col)
-    # Stage the touched buckets first (a write must never read the path it
-    # overwrites), then re-read and commit with dynamic partition overwrite:
-    # only partitions present in the staged data are replaced.
-    staging = f"{path}__staging"
-    result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, None)
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-            BUCKET_COL
-        ).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(mode_key)
-        else:
-            spark.conf.set(mode_key, prev)
-    fs, _, jvm = _hadoop_path(spark, path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-
-
-def compact_merged_table(
-    spark: SparkSession,
-    path: str,
-    max_files_per_partition: int = 1,
-    max_records_per_file: int | None = None,
-) -> dict[int, tuple[int, int]]:
-    """Compact bucket partitions of a merge_by_key table that accreted small
-    files (every merge appends at least one file to each touched partition —
-    after N daily batches a hot bucket holds N files and scan cost rises).
-
-    Rewrites ONLY partitions whose file count exceeds
-    ``max_files_per_partition``, through the same staging + dynamic
-    partition overwrite protocol as the merge itself, so healthy partitions
-    stay byte-identical and readers never see a half-compacted table. One
-    task per compacted bucket → one output file (``max_records_per_file``
-    re-splits genuinely oversized buckets). Returns
-    {bucket: (files_before, files_after)} for the compacted partitions."""
-    fs, root, jvm = _hadoop_path(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    stats: dict[int, int] = {}
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(f"{BUCKET_COL}="):
-            n_files = sum(
-                1
-                for f in fs.listStatus(st.getPath())
-                if f.getPath().getName().endswith(".parquet")
-            )
-            stats[int(name.split("=", 1)[1])] = n_files
-    affected = sorted(b for b, n in stats.items() if n > max_files_per_partition)
-    if not affected:
-        return {}
-    df = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin(affected))
-    staging = f"{path}__compact_staging"
-    writer = df.repartition(len(affected), F.col(BUCKET_COL)).write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(BUCKET_COL).parquet(staging)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, None)
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        # repartition again on commit: without it the staging read re-splits
-        # any bucket larger than files.maxPartitionBytes across tasks,
-        # breaking the one-file-per-bucket contract (and every later call
-        # would re-compact that bucket forever)
-        out = (
-            spark.read.parquet(staging)
-            .repartition(len(affected), F.col(BUCKET_COL))
-            .write.mode("overwrite")
-        )
-        if max_records_per_file:
-            out = out.option("maxRecordsPerFile", max_records_per_file)
-        out.partitionBy(BUCKET_COL).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(mode_key)
-        else:
-            spark.conf.set(mode_key, prev)
-    fs.delete(hpath(staging), True)
-    result = {}
-    for b in affected:
-        part = hpath(f"{path}/{BUCKET_COL}={b}")
-        n_after = sum(
-            1
-            for f in fs.listStatus(part)
-            if f.getPath().getName().endswith(".parquet")
-        )
-        result[b] = (stats[b], n_after)
-    return result
-
-
-def _resolve_winners(merged: DataFrame, keys: list[str], version_col: str | None) -> DataFrame:
-    order = [F.col("_merge_rank").asc()]
-    if version_col:
-        order = [F.col(version_col).desc_nulls_last(), *order]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_merge_rank")
+    return TxnTable(spark, path).commit_merge(
+        source, keys, version_col=version_col, txn=txn
     )
 
 

@@ -613,8 +613,8 @@ def ngram_store(df: DataFrame, id_col: str, text_col: str, n: int = 8) -> DataFr
 def merge_ngram_stores(store: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold a batch's gram-store delta into the persisted store: capped
     counts add (then re-cap), and solo_id survives only while the merged
-    count is 1. At scale this is io.merge_by_key on (_k1, _k2) — a
-    bucket-pruned rewrite proportional to the batch's key set."""
+    count is 1. At scale this is io.merge_by_key on (_k1, _k2), which
+    rewrites only the store files whose key range the batch overlaps."""
     s = store.select(
         "_k1", "_k2",
         F.col("n_docs").alias("_ns"), F.col("solo_id").alias("_ss"),

@@ -11,8 +11,8 @@ full recompute exactly — pinned by tests/test_incremental_agg.py.
 
 Scale shape: the merge touches |stored keys ∩ touched keys| + |new keys|
 rows via one key-partitioned join; history volume never re-enters the job.
-Compose with io.merge_by_key (bucket-pruned rewrite) or txn.TxnTable
-(atomic versioned publish) for the storage side.
+Compose with io.merge_by_key (an atomic txn.TxnTable merge that rewrites
+only the files the batch's keys overlap) for the storage side.
 """
 
 from __future__ import annotations

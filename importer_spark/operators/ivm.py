@@ -14,9 +14,9 @@ Sibling of operators/incremental_agg.py (monoid aggregate maintenance):
 together they cover the two mart shapes the reference recomputes from
 scratch each dbt run (models/mart/fct_orders.sql joins; the incremental
 lookback blocks). Scale shape: each delta join probes the FULL other side
-but carries only |Δ| rows on the delta side — with the stored tables
-bucketed on the join key (io.merge_by_key layout) the probe is
-bucket-pruned, and a small Δ broadcasts; history never re-joins history.
+but carries only |Δ| rows on the delta side — a small Δ broadcasts, so
+the probe is one pass over the stored side; history never re-joins
+history.
 
 Deletes/updates need counting or Z-relation semantics — out of scope here
 and raised loudly, not silently mis-maintained.

@@ -21,6 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 class ModelContext:
     spark: SparkSession
     sf_dir: str
+    # Source frames a load committed (e.g. the pipeline's ``orders``); a
+    # staging model reads its source from here when present, else sf_dir.
+    sources: dict[str, DataFrame] = field(default_factory=dict)
     outputs: dict[str, DataFrame] = field(default_factory=dict)
 
     def ref(self, name: str) -> DataFrame:
@@ -75,17 +78,19 @@ class ModelGraph:
         sf_dir: str,
         targets: list[str] | None = None,
         cache_fanout: bool = True,
+        sources: dict[str, DataFrame] | None = None,
     ) -> dict[str, DataFrame]:
         """Build ``targets`` (default: every model). Models with ≥2 dependents
         among the resolved set get ``.cache()`` — the lazy-Spark equivalent of
-        the reference's table materialization for shared intermediates."""
+        the reference's table materialization for shared intermediates.
+        ``sources`` overrides the sf_dir tables the staging models read."""
         targets = targets or list(self._models)
         order = self._topo_order(targets)
         dependents: dict[str, int] = {}
         for name in order:
             for d in self._models[name].deps:
                 dependents[d] = dependents.get(d, 0) + 1
-        ctx = ModelContext(spark, sf_dir)
+        ctx = ModelContext(spark, sf_dir, dict(sources or {}))
         for name in order:
             df = self._models[name].fn(ctx)
             if cache_fanout and dependents.get(name, 0) >= 2:

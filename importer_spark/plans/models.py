@@ -43,9 +43,10 @@ def stg_customers(ctx):
 @model("stg_orders")
 def stg_orders(ctx):
     """Staging: typed order projection + channel rules (int_quickbooks__orders
-    channel CASE, precedence preserved)."""
-    t = Tables(ctx.spark, ctx.sf_dir)
-    return t.orders.select(
+    channel CASE, precedence preserved). Reads the loaded ``orders`` when
+    the context carries them."""
+    orders = ctx.sources.get("orders") or Tables(ctx.spark, ctx.sf_dir).orders
+    return orders.select(
         F.col("o_orderkey").alias("order_key"),
         F.col("o_custkey").alias("cust_key"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),

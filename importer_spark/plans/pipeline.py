@@ -1,10 +1,12 @@
 """Seed / incremental orchestration (SURVEY §2.9 I4, §3.1).
 
 The reference's orchestrator runs sources in priority order with
---seed / --incremental / full modes (orchestrator.py:580-629) and tracks
-processed files in a JSON ledger. Here: one driver function composing the
-library — discovery → (seed ? full load : cursor delta) → merge-by-key →
-DAG rebuild → quality gates. State lives in parquet next to the warehouse.
+--seed / --incremental / full modes (orchestrator.py:580-629), upserts each
+source with dlt's merge disposition and keeps the incremental cursor in the
+load state. Here: one function composing the library — (seed ? full
+replace : rows past the cursor merged by key) → DAG rebuild → quality gates.
+Each source is a transaction-log table (txn.py): a load's rows and its new
+cursor publish in one commit, so the cursor can never disagree with the data.
 """
 
 from __future__ import annotations
@@ -15,12 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from importer_spark.io import merge_by_key
-from importer_spark.streaming.incremental import (
-    commit_cursor,
-    cursor_advanced,
-    cursor_incremental_batch,
-    read_cursor,
-)
+from importer_spark.txn import TxnTable, _dec_stat, _enc_stat
 
 
 @dataclass
@@ -28,6 +25,16 @@ class LoadResult:
     mode: str
     rows_loaded: int
     target_rows: int
+
+
+def committed_cursor(table: TxnTable):
+    """The load cursor recorded by the newest commit that carries one, in
+    its native type (None before the first load)."""
+    for v in reversed(table._versions()):
+        txn = table._manifest(v).get("txn") or {}
+        if "cursor" in txn:
+            return _dec_stat(txn["cursor"])
+    return None
 
 
 def run_source_load(
@@ -40,30 +47,39 @@ def run_source_load(
 ) -> LoadResult:
     """Load one source table with seed/incremental semantics.
 
-    seed: full reload, cursor advanced to the batch max;
-    incremental: only rows past the persisted cursor, merged by PK so
-    re-delivered rows upsert (reference I3 late-data handling). The cursor
-    commits AFTER the warehouse write succeeds (at-least-once: a failed run
-    re-delivers, and the PK merge absorbs the duplicates).
+    seed: full replace;
+    incremental: only rows past the committed cursor, merged by PK with the
+    cursor column as the version, so re-delivered rows upsert (reference I3
+    late-data handling).
+
+    One aggregate job counts the batch and takes its cursor max; the rows
+    and that cursor then publish in ONE commit. A run that fails before the
+    commit leaves the table and the cursor as they were, and its re-run
+    loads the batch exactly once. An empty incremental batch commits
+    nothing. After a commit the superseded files are vacuumed, so the table
+    keeps one copy on disk.
     """
-    state_path = f"{warehouse_path}__cursor"
-    if mode == "seed":
-        delta = source
-    elif mode == "incremental":
-        delta = cursor_incremental_batch(
-            spark, source, cursor_col, state_path, auto_commit=False
-        )
-    else:
+    if mode not in ("seed", "incremental"):
         raise ValueError(f"unknown mode {mode!r}; use 'seed' or 'incremental'")
-    n = delta.count()
+    table = TxnTable(spark, warehouse_path)
+    delta = source
+    if mode == "incremental":
+        prev = committed_cursor(table)
+        if prev is not None:
+            delta = source.filter(F.col(cursor_col) > F.lit(prev))
+    n, new_max = delta.agg(F.count(F.lit(1)), F.max(cursor_col)).first()
+    ok, cursor = _enc_stat(new_max)
+    if new_max is not None and not ok:
+        raise TypeError(f"unsupported cursor value {new_max!r} in {cursor_col!r}")
     if mode == "seed":
-        delta.write.mode("overwrite").parquet(warehouse_path)
-    else:
-        merge_by_key(spark, delta, warehouse_path, keys=keys, version_col=cursor_col)
-    # Durable write finished — now advance the watermark (never backwards).
-    new_max = source.agg(F.max(cursor_col).alias("cursor")).first()["cursor"]
-    prev = read_cursor(spark, state_path)
-    if cursor_advanced(new_max, prev):
-        commit_cursor(spark, state_path, new_max)
-    total = spark.read.parquet(warehouse_path).count()
-    return LoadResult(mode=mode, rows_loaded=n, target_rows=total)
+        table.commit_replace(delta, txn={"cursor": cursor})
+    elif n:
+        merge_by_key(
+            spark, delta, warehouse_path, keys=keys, version_col=cursor_col,
+            txn={"cursor": cursor},
+        )
+    latest = table.latest_version()
+    if mode == "seed" or n:
+        table.vacuum(latest)
+    target_rows = 0 if latest is None else table.num_rows(latest)
+    return LoadResult(mode=mode, rows_loaded=n, target_rows=target_rows)

@@ -1,5 +1,4 @@
 from importer_spark.streaming.incremental import (  # noqa: F401
-    cursor_incremental_batch,
     stream_events,
     windowed_event_counts,
 )

@@ -1,12 +1,13 @@
 """Streaming / incremental processing (SURVEY §2.9).
 
 The reference is batch-only; its incremental machinery maps to:
-  I1 cursor-based extract  → ``cursor_incremental_batch`` (batch + watermark
-     table) or ``stream_events`` (Structured Streaming file source, whose
-     checkpoint gives exactly-once the reference hand-rolls via a JSON ledger
-     — orchestrator.py:34-141).
+  I1 cursor-based extract  → plans.pipeline.run_source_load (rows past the
+     cursor recorded in the source table's last load commit) or
+     ``stream_events`` (Structured Streaming file source, whose checkpoint
+     gives exactly-once the reference hand-rolls via a JSON ledger —
+     orchestrator.py:34-141).
   I2 snapshot append       → io.snapshot_append.
-  I3 merge upsert          → io.merge_by_key.
+  I3 merge upsert          → io.merge_by_key (a TxnTable.commit_merge).
 
 ``windowed_event_counts`` is written against a plain DataFrame so the SAME
 code runs in batch (oracle-checked in the catalog) and under readStream with
@@ -50,70 +51,6 @@ def windowed_event_counts(
             "total_value",
         )
     )
-
-
-def read_cursor(spark: SparkSession, state_path: str):
-    """Read the persisted high-watermark (None if no state yet). Only a
-    missing path counts as 'no state' — other read errors propagate."""
-    from importer_spark.io import read_parquet_if_exists
-
-    state = read_parquet_if_exists(spark, state_path)
-    if state is None:
-        return None
-    row = state.first()
-    return None if row is None else row["cursor"]
-
-
-def cursor_advanced(new_value, prev) -> bool:
-    """True when ``new_value`` moves the watermark forward. Compares in the
-    cursor's NATIVE type (the state parquet preserves it): a string compare
-    would stall numeric cursors forever at e.g. 9 → 10 ('10' < '9')."""
-    if new_value is None:
-        return False
-    if prev is None:
-        return True
-    try:
-        return new_value > prev
-    except TypeError:  # mixed/legacy state types: fall back to strings
-        return str(new_value) > str(prev)
-
-
-def commit_cursor(spark: SparkSession, state_path: str, value) -> None:
-    """Persist the high-watermark. Call AFTER the delta has been durably
-    consumed — committing first would skip the batch on a downstream
-    failure."""
-    if value is None:
-        return  # empty batch: keep the previous watermark
-    spark.createDataFrame([(value,)], ["cursor"]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(state_path)
-
-
-def cursor_incremental_batch(
-    spark: SparkSession,
-    source: DataFrame,
-    cursor_col: str,
-    state_path: str,
-    auto_commit: bool = True,
-) -> DataFrame:
-    """Cursor-based incremental extract (reference I1: dlt's ``updated_at``
-    high-watermark, shopify_dlt/__init__.py:69-77): rows strictly past the
-    persisted cursor. State is a 1-row parquet — on a real deployment, a
-    table in the catalog.
-
-    With ``auto_commit`` the watermark advances immediately — at-most-once
-    if the caller's downstream write then fails. For at-least-once, pass
-    ``auto_commit=False``, consume the delta durably, then call
-    ``commit_cursor(spark, state_path, delta_max)`` yourself (see
-    plans/pipeline.py::run_source_load). An empty source never regresses the
-    watermark."""
-    prev = read_cursor(spark, state_path)
-    delta = source if prev is None else source.filter(F.col(cursor_col) > F.lit(prev))
-    if auto_commit:
-        new_max = source.agg(F.max(cursor_col).alias("cursor")).first()["cursor"]
-        if cursor_advanced(new_max, prev):
-            commit_cursor(spark, state_path, new_max)
-    return delta
 
 
 def stream_dedup_within_watermark(

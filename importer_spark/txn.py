@@ -522,24 +522,28 @@ class TxnTable:
           their key instead of upserting (the changelog tombstone;
           the column is dropped from stored rows).
 
-        This simple form rewrites the whole snapshot through the log
-        (correct, atomic); the bucket-pruned rewrite in io.merge_by_key is
-        the targeted-IO variant and composes by committing only changed
-        buckets' files."""
+        File-pruned copy-on-write: one aggregate job takes the batch's row
+        count and the min/max of its first key column; only the live files
+        whose manifest stats overlap that range are read and replaced, and
+        every other file stays in the snapshot by reference. A batch whose
+        keys all lie above the current max rewrites no file. An empty batch
+        still publishes a version (carrying ``txn``) but writes nothing."""
+        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        def _dedup_plain(df: DataFrame) -> DataFrame:
-            # One row per key, deterministic tie-break (max struct of the
-            # non-key columns) — matching the versioned path's semantics
-            # instead of landing every duplicate source row in the snapshot.
-            # (Delta MERGE errors on multiple source matches; we resolve
-            # deterministically, which is the changelog-friendly choice.)
+        def newest_per_key(df: DataFrame) -> DataFrame:
+            # One row per key, deterministic tie-break (highest version,
+            # then max struct of the other columns) instead of landing every
+            # duplicate source row in the snapshot. (Delta MERGE errors on
+            # multiple source matches; we resolve deterministically, which
+            # is the changelog-friendly choice.)
             other = [c for c in df.columns if c not in keys]
             if not other:
                 return df.distinct()
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*keys).orderBy(F.struct(*other).desc())
+            order = [F.struct(*other).desc()]
+            if version_col is not None:
+                order.insert(0, F.col(version_col).desc())
+            w = Window.partitionBy(*keys).orderBy(*order)
             return (
                 df.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
@@ -547,86 +551,79 @@ class TxnTable:
             )
 
         base = self.latest_version()
-        if base is None:
-            upserts = source
-            if delete_col is not None:
-                upserts = upserts.filter(
-                    ~F.coalesce(F.col(delete_col), F.lit(False))
-                ).drop(delete_col)
-            if version_col is None:
-                upserts = _dedup_plain(upserts)
-            else:
-                from pyspark.sql import Window
-
-                other = [c for c in upserts.columns if c not in keys]
-                w = Window.partitionBy(*keys).orderBy(
-                    F.col(version_col).desc(), F.struct(*other).desc()
+        n, kmin, kmax = source.agg(
+            F.count(F.lit(1)), F.min(keys[0]), F.max(keys[0])
+        ).first()
+        touched: list[str] = []
+        if base is not None and kmin is not None:
+            # NULL keys match nothing, so an all-NULL batch touches no file.
+            if isinstance(kmin, datetime.datetime):
+                # collect() yields local-naive instants; stats are UTC-naive
+                kmin, kmax = (
+                    v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+                    for v in (kmin, kmax)
                 )
-                upserts = (
-                    upserts.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-            adds = self._write_data_files(upserts, 0)
-            m = {"action": "merge", "adds": adds, "removes": []}
-            if txn:
-                m["txn"] = txn
-            # Conditional even for the bootstrap: a concurrent version-0
-            # commit means "no current rows" was a stale assumption.
-            return self._publish(m, expected_base=None)
-        current = self.read(base)
+            conds = [(keys[0], ">=", kmin), (keys[0], "<=", kmax)]
+            stats = self._snapshot_stats(base)
+            touched = [
+                f for f in self._snapshot_files(base)
+                if _file_may_match(stats.get(f), conds)
+            ]
         upserts = source
         if delete_col is not None:
             upserts = upserts.filter(
                 ~F.coalesce(F.col(delete_col), F.lit(False))
             ).drop(delete_col)
-        if version_col is None:
-            survivors = current.join(source.select(*keys).distinct(), keys, "left_anti")
-            upserts = _dedup_plain(upserts)
-        else:
-            # A target row survives if no source row for its key has an
-            # equal-or-newer version (deletes always win at any version).
-            beats = source.groupBy(*keys).agg(
-                F.max(version_col).alias("_src_ver"),
-                *( [F.max(F.col(delete_col).cast("int")).alias("_src_del")]
-                   if delete_col is not None else [] ),
+        upserts = newest_per_key(upserts)
+        merged = upserts
+        if touched:
+            current = self.spark.read.parquet(
+                *[os.path.join(self.data_dir, f) for f in touched]
             )
-            joined = current.join(F.broadcast(beats), keys, "left")
-            overridden = F.col("_src_ver").isNotNull() & (
-                F.col("_src_ver") >= F.col(version_col)
-            )
-            if delete_col is not None:
-                overridden = overridden | (F.col("_src_del") == 1)
-            survivors = joined.filter(~F.coalesce(overridden, F.lit(False))).select(
-                *current.columns
-            )
-            # Only the NEWEST source row per key lands (deterministic: ties
-            # on version break on the remaining columns), and it must not be
-            # older than a surviving target row.
-            from pyspark.sql import Window
-
-            other = [c for c in upserts.columns if c not in keys]
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(version_col).desc(), F.struct(*other).desc()
-            )
-            upserts = (
-                upserts.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            upserts = upserts.join(
-                survivors.select(*keys, F.col(version_col).alias("_tgt_ver")),
-                keys,
-                "left",
-            ).filter(
-                F.col("_tgt_ver").isNull() | (F.col(version_col) >= F.col("_tgt_ver"))
-            ).drop("_tgt_ver")
-        merged = survivors.unionByName(upserts)
-        hint = base + 1
-        adds = self._write_data_files(merged, hint)
-        m = {"action": "merge", "adds": adds, "removes": self._snapshot_files(base)}
+            if version_col is None:
+                survivors = current.join(
+                    source.select(*keys).distinct(), keys, "left_anti"
+                )
+            else:
+                # A target row survives if no source row for its key has an
+                # equal-or-newer version (deletes always win at any version).
+                beats = source.groupBy(*keys).agg(
+                    F.max(version_col).alias("_src_ver"),
+                    *( [F.max(F.col(delete_col).cast("int")).alias("_src_del")]
+                       if delete_col is not None else [] ),
+                )
+                joined = current.join(F.broadcast(beats), keys, "left")
+                overridden = F.col("_src_ver").isNotNull() & (
+                    F.col("_src_ver") >= F.col(version_col)
+                )
+                if delete_col is not None:
+                    overridden = overridden | (F.col("_src_del") == 1)
+                survivors = joined.filter(
+                    ~F.coalesce(overridden, F.lit(False))
+                ).select(*current.columns)
+                # The newest source row must not be older than a surviving
+                # target row.
+                upserts = upserts.join(
+                    survivors.select(*keys, F.col(version_col).alias("_tgt_ver")),
+                    keys,
+                    "left",
+                ).filter(
+                    F.col("_tgt_ver").isNull()
+                    | (F.col(version_col) >= F.col("_tgt_ver"))
+                ).drop("_tgt_ver")
+            merged = survivors.unionByName(upserts)
+        # The bootstrap commit writes even an empty batch, so the table
+        # gets a schema; later empty batches add no files.
+        adds = (
+            self._write_data_files(merged, (base if base is not None else -1) + 1)
+            if n or base is None
+            else []
+        )
+        m = {"action": "merge", "adds": adds, "removes": touched}
         if txn:
             m["txn"] = txn
+        # Conditional even for the bootstrap: a concurrent version-0
+        # commit means "no current rows" was a stale assumption.
         return self._publish(m, expected_base=base)
 
     def commit_delete(self, predicate) -> int:
@@ -733,6 +730,12 @@ class TxnTable:
                 return self.spark.createDataFrame([], schema)
         raise ValueError("empty table with no prior schema to infer from")
 
+    def num_rows(self, version: int | None = None) -> int:
+        """Live row count from the manifests' per-file stats — no data
+        read."""
+        v = self.latest_version() if version is None else version
+        return sum(s["rows"] for s in self._snapshot_stats(v).values())
+
     def skipping_report(
         self, conds: list[tuple], version: int | None = None
     ) -> dict:
@@ -806,8 +809,8 @@ class TxnTable:
         it has already seen, without rescanning the table. Appends and the
         add-side of merges/replaces are captured; row-level deletes are
         visible as the removed files' absence from later snapshots (a
-        full CDC with update/delete row images needs key-level diffing —
-        compose with merge_by_key's bucket pruning for that).
+        full CDC with update/delete row images needs key-level diffing,
+        which commit_merge's file pruning keeps proportional to the batch).
 
         Cost is O(files added in the range): the log prunes everything else.
         """

@@ -145,3 +145,77 @@ def test_cli_refine_end_to_end(spark, tmp_path):
     summary2 = [json.loads(line) for line in buf2.getvalue().splitlines()][-1]
     assert summary2["buckets"] == summary["buckets"]
     assert summary2["docs_out"] == summary["docs_out"]
+
+
+def test_pipeline_marts_read_the_loaded_orders(spark, tmp_path):
+    """After a delta-only incremental delivery (the sf dir holds only new
+    and re-delivered orders), the marts are built from the orders the load
+    committed, so they equal a full rebuild over the merged rows — not a
+    build over the delta alone."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from importer_spark.io import TABLES
+    from importer_spark.plans.dag import GRAPH
+    from tests.conftest import SF_DIR
+
+    def table_dir(name, orders):
+        d = tmp_path / name
+        d.mkdir()
+        for t in TABLES:
+            if t != "orders":
+                os.symlink(os.path.join(SF_DIR, f"{t}.parquet"), d / f"{t}.parquet")
+        pq.write_table(orders, d / "orders.parquet")
+        return str(d)
+
+    base = pq.read_table(os.path.join(SF_DIR, "orders.parquet"))
+    top = pc.max(base["o_orderdate"]).as_py()
+    day = datetime.timedelta(days=1)
+    redelivered = base.slice(0, 40)
+    redelivered = redelivered.set_column(
+        redelivered.schema.get_field_index("o_totalprice"), "o_totalprice",
+        pc.multiply(redelivered["o_totalprice"], 2.0),
+    ).set_column(
+        redelivered.schema.get_field_index("o_orderdate"), "o_orderdate",
+        pa.array([top + day] * 40, type=base.schema.field("o_orderdate").type),
+    )
+    new = base.slice(100, 20)
+    max_key = pc.max(base["o_orderkey"]).as_py()
+    new = new.set_column(
+        new.schema.get_field_index("o_orderkey"), "o_orderkey",
+        pa.array(range(max_key + 1, max_key + 21), type=pa.int64()),
+    ).set_column(
+        new.schema.get_field_index("o_orderdate"), "o_orderdate",
+        pa.array([top + 2 * day] * 20, type=base.schema.field("o_orderdate").type),
+    )
+    delta = pa.concat_tables([redelivered, new])
+    merged = pa.concat_tables([base.slice(40), redelivered, new])
+    delta_dir = table_dir("delta", delta)
+    full_dir = table_dir("full", merged)
+
+    wh = str(tmp_path / "wh")
+    assert main(["pipeline", "--warehouse", wh, "--mode", "seed", "--skip-quality"],
+                out=io.StringIO()) == 0
+    buf = io.StringIO()
+    assert main(["pipeline", "--sf-dir", delta_dir, "--warehouse", wh,
+                 "--mode", "incremental"], out=buf) == 0
+    summary = [json.loads(line) for line in buf.getvalue().splitlines()][-1]
+    assert summary["ok"]
+    assert summary["sources"]["orders"] == {
+        "mode": "incremental", "rows_loaded": 60, "target_rows": base.num_rows + 20,
+    }
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    want = GRAPH.run(spark, full_dir)
+    try:
+        for name in ("mart_customer_health", "mart_segment_summary"):
+            got = spark.read.parquet(os.path.join(wh, "marts", name))
+            assert rows(got) == rows(want[name].select(*got.columns)), name
+    finally:
+        GRAPH.release(want)

@@ -18,11 +18,12 @@ from importer_spark.quality import (
     assert_not_null,
     assert_unique,
 )
+from importer_spark.plans.pipeline import run_source_load
 from importer_spark.streaming.incremental import (
-    cursor_incremental_batch,
     stream_events,
     windowed_event_counts,
 )
+from importer_spark.txn import TxnTable
 from tests.conftest import SF_DIR
 
 
@@ -32,7 +33,7 @@ def test_merge_by_key_upsert(spark, tmp_path):
     merge_by_key(spark, v1, path, keys=["k"], version_col="ver")
     v2 = spark.createDataFrame([Row(k=2, v="b2", ver=2), Row(k=3, v="c", ver=2)])
     merge_by_key(spark, v2, path, keys=["k"], version_col="ver")
-    out = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    out = {r.k: r.v for r in TxnTable(spark, path).read().collect()}
     assert out == {1: "a", 2: "b2", 3: "c"}
 
 
@@ -40,7 +41,7 @@ def test_merge_by_key_source_wins_without_version(spark, tmp_path):
     path = str(tmp_path / "tbl")
     merge_by_key(spark, spark.createDataFrame([Row(k=1, v="old")]), path, keys=["k"])
     merge_by_key(spark, spark.createDataFrame([Row(k=1, v="new")]), path, keys=["k"])
-    assert spark.read.parquet(path).first().v == "new"
+    assert [r.v for r in TxnTable(spark, path).read().collect()] == ["new"]
 
 
 def test_snapshot_append_incremental(spark, tmp_path):
@@ -62,15 +63,18 @@ def test_snapshot_append_incremental(spark, tmp_path):
 
 
 def test_cursor_incremental_batch(spark, tmp_path):
-    state = str(tmp_path / "cursor")
+    """An incremental load takes only the rows past the cursor that the
+    previous load committed."""
+    wh = str(tmp_path / "src")
     src = spark.createDataFrame([Row(id=1, updated_at="2024-01-01"), Row(id=2, updated_at="2024-01-02")])
-    first = cursor_incremental_batch(spark, src, "updated_at", state)
-    assert first.count() == 2
+    first = run_source_load(spark, src, wh, keys=["id"], cursor_col="updated_at")
+    assert (first.rows_loaded, first.target_rows) == (2, 2)
     src2 = spark.createDataFrame(
         [Row(id=2, updated_at="2024-01-02"), Row(id=3, updated_at="2024-01-03")]
     )
-    second = cursor_incremental_batch(spark, src2, "updated_at", state)
-    assert [r.id for r in second.collect()] == [3]
+    second = run_source_load(spark, src2, wh, keys=["id"], cursor_col="updated_at")
+    assert (second.rows_loaded, second.target_rows) == (1, 3)
+    assert sorted(r.id for r in TxnTable(spark, wh).read().collect()) == [1, 2, 3]
 
 
 def test_streaming_batch_equivalence(spark, tmp_path):
@@ -328,63 +332,47 @@ def test_cosine_pairs_blockwise_guard(spark):
 
 
 def test_merge_rewrites_only_matched_partitions(spark, tmp_path):
-    """The scale contract of merge_by_key: a merge touching one key must
-    leave every unmatched bucket partition's files BYTE-IDENTICAL (same
-    names, same contents) — cost proportional to matched buckets, not the
-    table."""
+    """The scale contract of merge_by_key: a merge reads and replaces only
+    the live files whose key range (manifest stats) overlaps the batch;
+    every other file stays in the snapshot by reference, byte-identical.
+    A batch of keys above the current max rewrites no file."""
     import hashlib
-    from importer_spark.io import merge_by_key
 
     path = str(tmp_path / "tbl")
+    t = TxnTable(spark, path)
     base = spark.createDataFrame([Row(k=i, v=f"v{i}", ver=1) for i in range(200)])
-    merge_by_key(spark, base, path, keys=["k"], version_col="ver", n_buckets=8)
+    t.commit_append(base.repartitionByRange(8, "k"))
+    live = t.skipping_report([])["kept"]
+    hit = t.skipping_report([("k", "==", 7)])["kept"]
+    assert len(live) == 8 and len(hit) == 1
 
-    def snapshot():
-        return {
-            str(f.relative_to(tmp_path)): hashlib.md5(f.read_bytes()).hexdigest()
-            for f in (tmp_path / "tbl").rglob("*.parquet")
-        }
+    def digests(files):
+        return {f: hashlib.md5((tmp_path / "tbl" / "data" / f).read_bytes()).hexdigest()
+                for f in files}
 
-    before = snapshot()
-    merge_by_key(
+    untouched = digests(set(live) - set(hit))
+    v = merge_by_key(
         spark,
         spark.createDataFrame([Row(k=7, v="updated", ver=2)]),
         path,
         keys=["k"],
         version_col="ver",
     )
-    after = snapshot()
-    touched_dirs = {p.rsplit("/", 2)[-2] for p in set(before) ^ set(after)} | {
-        p.rsplit("/", 2)[-2] for p in before if before.get(p) != after.get(p)
-    }
-    # exactly one bucket dir may differ; every other partition byte-identical
-    assert len(touched_dirs) == 1, touched_dirs
-    untouched_before = {p: h for p, h in before.items() if p.rsplit("/", 2)[-2] not in touched_dirs}
-    untouched_after = {p: h for p, h in after.items() if p.rsplit("/", 2)[-2] not in touched_dirs}
-    assert untouched_before and untouched_before == untouched_after
-    # and the merge semantics held
-    out = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert out[7] == "updated" and len(out) == 200
+    assert t._manifest(v)["removes"] == hit
+    after = t.skipping_report([])["kept"]
+    assert set(untouched) <= set(after) and digests(untouched) == untouched
 
-
-def test_merge_migrates_legacy_unpartitioned_target(spark, tmp_path):
-    """A pre-bucketing flat parquet target is migrated into the partitioned
-    layout on the next merge, preserving rows and upsert semantics."""
-    from importer_spark.io import merge_by_key
-
-    path = str(tmp_path / "legacy")
-    spark.createDataFrame([Row(k=1, v="a", ver=1), Row(k=2, v="b", ver=1)]).write.parquet(path)
-    merge_by_key(
+    v = merge_by_key(
         spark,
-        spark.createDataFrame([Row(k=2, v="b2", ver=2), Row(k=3, v="c", ver=1)]),
+        spark.createDataFrame([Row(k=500, v="new", ver=1), Row(k=501, v="new", ver=1)]),
         path,
         keys=["k"],
         version_col="ver",
-        n_buckets=4,
     )
-    out = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert out == {1: "a", 2: "b2", 3: "c"}
-    assert any(d.name.startswith("_kb=") for d in (tmp_path / "legacy").iterdir())
+    assert t._manifest(v)["removes"] == []
+    # and the merge semantics held
+    out = {r.k: r.v for r in t.read().collect()}
+    assert out[7] == "updated" and out[500] == "new" and len(out) == 202
 
 
 def test_ivf_trained_quantizer_recall(spark):
@@ -459,52 +447,6 @@ def test_incremental_near_dups_matches_batch_slice(spark):
     covered = set(got1) | set(got2)
     uncovered = {k for k in full if k not in covered}
     assert all(k[0] in old1 and k[1] in old1 for k in uncovered)
-
-
-def test_compact_merged_table(spark, tmp_path):
-    """Compaction rewrites only multi-file bucket partitions down to one
-    file each, preserves every row, and leaves already-compact partitions
-    byte-identical."""
-    import hashlib
-    from importer_spark.io import compact_merged_table, merge_by_key
-
-    from importer_spark.io import BUCKET_COL, _bucket_expr
-
-    path = str(tmp_path / "tbl")
-    rows = [Row(k=i, v=f"v{i}", ver=1) for i in range(400)]
-    merge_by_key(spark, spark.createDataFrame(rows), path, keys=["k"], n_buckets=4)
-    # accrete files the way an append-based ingest does
-    for wave in range(2):
-        extra = spark.createDataFrame(
-            [Row(k=1000 + wave * 100 + i, v="x", ver=1) for i in range(100)]
-        ).withColumn(BUCKET_COL, _bucket_expr(["k"], 4))
-        extra.coalesce(1).write.mode("append").partitionBy(BUCKET_COL).parquet(path)
-
-    def files():
-        return {
-            str(f.relative_to(tmp_path)): hashlib.md5(f.read_bytes()).hexdigest()
-            for f in (tmp_path / "tbl").rglob("*.parquet")
-        }
-
-    before = files()
-    before_rows = sorted((r.k, r.v) for r in spark.read.parquet(path).collect())
-    multi = {
-        d.name
-        for d in (tmp_path / "tbl").iterdir()
-        if d.is_dir() and len(list(d.glob("*.parquet"))) > 1
-    }
-    assert multi, "fixture should produce multi-file partitions"
-
-    result = compact_merged_table(spark, path)
-    assert set(result) == {int(m.split("=")[1]) for m in multi}
-    assert all(a > 1 and b == 1 for a, b in result.values()), result
-
-    after = files()
-    untouched = {p: h for p, h in before.items() if p.split("/")[1] not in multi}
-    assert untouched == {p: h for p, h in after.items() if p.split("/")[1] not in multi}
-    assert before_rows == sorted((r.k, r.v) for r in spark.read.parquet(path).collect())
-    # idempotent: a second pass finds nothing to do
-    assert compact_merged_table(spark, path) == {}
 
 
 def test_global_rank_matches_window_both_directions(spark):
@@ -759,49 +701,6 @@ def test_incremental_substring_spans_matches_batch_slice(spark):
         for r in duplicate_ngram_spans(base, "doc_id", "text").collect()
     }
     assert regot == rewant
-
-
-def test_merge_bucket_keys_prefix_colocates_entities(spark, tmp_path):
-    """bucket_keys = a PK prefix: all of an entity's rows land in ONE
-    bucket, so an update batch touching E entities rewrites <= E buckets;
-    resolution still dedups on the FULL key; mismatched bucket_keys on a
-    later merge raises instead of silently splitting PKs."""
-    import glob
-
-    from importer_spark.io import merge_by_key
-
-    rows = [(o, l, float(o * 10 + l)) for o in range(50) for l in range(1, 5)]
-    df = spark.createDataFrame(rows, "order_key bigint, line int, qty double")
-    tgt = str(tmp_path / "lines")
-    merge_by_key(
-        spark, df, tgt, keys=["order_key", "line"],
-        n_buckets=32, bucket_keys=["order_key"],
-    )
-    before = set(glob.glob(tgt + "/**/*.parquet", recursive=True))
-
-    upd = df.filter(F.col("order_key") == 7).withColumn("qty", F.col("qty") + 100)
-    merge_by_key(spark, upd, tgt, keys=["order_key", "line"], bucket_keys=["order_key"])
-    rewritten_dirs = {
-        p.split("/_kb=")[1].split("/")[0]
-        for p in set(glob.glob(tgt + "/**/*.parquet", recursive=True)) - before
-    }
-    assert len(rewritten_dirs) == 1  # one entity -> one bucket
-
-    got = spark.read.parquet(tgt)
-    assert got.count() == len(rows)  # full-key dedup, no duplicate PKs
-    assert (
-        got.filter((F.col("order_key") == 7) & (F.col("line") == 2))
-        .first().qty == 72.0 + 100
-    )
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="bucket_keys"):
-        merge_by_key(spark, upd, tgt, keys=["order_key", "line"])
-    with _pytest.raises(ValueError, match="prefix"):
-        merge_by_key(
-            spark, upd, tgt, keys=["order_key", "line"], bucket_keys=["line"]
-        )
 
 
 def test_semdedup_operator_matches_bruteforce(spark):

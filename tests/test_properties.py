@@ -65,13 +65,14 @@ def test_merge_by_key_idempotent(spark, tmp_path_factory, rows):
     """Applying the same merge batch twice yields the same table (I3 —
     re-delivered exports must not duplicate)."""
     from importer_spark.io import merge_by_key
+    from importer_spark.txn import TxnTable
 
     path = str(tmp_path_factory.mktemp("merge") / "tbl")
     df = spark.createDataFrame(rows, schema="k int, v string, ver int")
     merge_by_key(spark, df, path, keys=["k"], version_col="ver")
-    first = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    first = sorted(tuple(r) for r in TxnTable(spark, path).read().collect())
     merge_by_key(spark, df, path, keys=["k"], version_col="ver")
-    second = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    second = sorted(tuple(r) for r in TxnTable(spark, path).read().collect())
     assert first == second
     # exactly one row per key
     ks = [r[0] for r in first]

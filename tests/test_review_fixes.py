@@ -10,56 +10,94 @@ from pyspark.sql import functions as F
 
 from importer_spark.io import merge_by_key, read_parquet_if_exists
 from importer_spark.operators.skew import salted_join
-from importer_spark.plans.pipeline import run_source_load
+from importer_spark.plans.pipeline import committed_cursor, run_source_load
 from importer_spark.sources.rest import RestCursorSource
-from importer_spark.streaming.incremental import (
-    commit_cursor,
-    cursor_incremental_batch,
-    read_cursor,
-)
+from importer_spark.txn import FilesystemLogStore, TxnTable
 
 
 def test_merge_raises_on_corrupt_target_instead_of_overwriting(spark, tmp_path):
     path = str(tmp_path / "tbl")
     merge_by_key(spark, spark.createDataFrame([Row(k=1, v="keep")]), path, keys=["k"])
-    # Corrupt the data file of key 1's own bucket: re-merging key 1 must
-    # read that partition, hit the corruption, and propagate — not wipe the
-    # table. (A corrupt file in an UNMATCHED bucket is legitimately never
-    # read: partition pruning leaves it byte-untouched.)
-    parquet_files = list((tmp_path / "tbl").rglob("*.parquet"))
+    # Corrupt the live file holding key 1: re-merging key 1 must read that
+    # file, hit the corruption, and propagate — publishing nothing. (A
+    # corrupt file whose key range the batch misses is legitimately never
+    # read: file pruning leaves it byte-untouched.)
+    parquet_files = list((tmp_path / "tbl" / "data").glob("*.parquet"))
     assert parquet_files
     for f in parquet_files:
         f.write_bytes(b"not a parquet file")
+    t = TxnTable(spark, path)
+    before = t.latest_version()
     with pytest.raises(Exception):
         merge_by_key(spark, spark.createDataFrame([Row(k=1, v="new")]), path, keys=["k"])
+    assert t.latest_version() == before
 
 
 def test_read_parquet_if_exists_missing_vs_error(spark, tmp_path):
     assert read_parquet_if_exists(spark, str(tmp_path / "nope")) is None
 
 
+def _load(spark, rows, wh, mode="incremental", schema="id int, updated_at string"):
+    src = spark.createDataFrame(rows, schema=schema)
+    return run_source_load(spark, src, wh, keys=["id"], cursor_col="updated_at", mode=mode)
+
+
 def test_cursor_never_regresses_and_empty_batch_keeps_watermark(spark, tmp_path):
-    state = str(tmp_path / "cur")
-    commit_cursor(spark, state, "2024-05-01")
-    # Empty source: watermark unchanged, delta empty.
-    empty = spark.createDataFrame([], schema="id int, updated_at string")
-    delta = cursor_incremental_batch(spark, empty, "updated_at", state)
-    assert delta.count() == 0
-    assert read_cursor(spark, state) == "2024-05-01"
+    wh = str(tmp_path / "src")
+    _load(spark, [(1, "2024-05-01")], wh, mode="seed")
+    t = TxnTable(spark, wh)
+    v = t.latest_version()
+    # Empty source: nothing committed, watermark unchanged.
+    res = _load(spark, [], wh)
+    assert (res.rows_loaded, res.target_rows) == (0, 1)
+    assert t.latest_version() == v and committed_cursor(t) == "2024-05-01"
     # Source containing only old rows: watermark unchanged.
-    old = spark.createDataFrame([Row(id=1, updated_at="2024-01-01")])
-    delta = cursor_incremental_batch(spark, old, "updated_at", state)
-    assert delta.count() == 0
-    assert read_cursor(spark, state) == "2024-05-01"
+    res = _load(spark, [(2, "2024-01-01")], wh)
+    assert res.rows_loaded == 0
+    assert t.latest_version() == v and committed_cursor(t) == "2024-05-01"
 
 
 def test_run_source_load_commits_cursor_after_write(spark, tmp_path):
+    """The cursor lands in the same manifest as the rows it covers."""
     wh = str(tmp_path / "wh")
-    src = spark.createDataFrame([Row(id=1, v="a", updated_at="2024-01-01")])
-    run_source_load(spark, src, wh, keys=["id"], cursor_col="updated_at", mode="seed")
+    _load(spark, [(1, "2024-01-01")], wh, mode="seed")
+    t = TxnTable(spark, wh)
+    m = t._manifest(t.latest_version())
+    assert m["adds"] and m["txn"] == {"cursor": "2024-01-01"}
     # Stale re-delivery only: cursor stays at the seed max.
-    run_source_load(spark, src, wh, keys=["id"], cursor_col="updated_at", mode="incremental")
-    assert read_cursor(spark, wh + "__cursor") == "2024-01-01"
+    _load(spark, [(1, "2024-01-01")], wh)
+    assert committed_cursor(t) == "2024-01-01"
+    res = _load(spark, [(2, "2024-01-03")], wh)
+    m = t._manifest(t.latest_version())
+    assert res.rows_loaded == 1 and m["adds"] and m["txn"] == {"cursor": "2024-01-03"}
+
+
+def test_run_source_load_is_exactly_once(spark, tmp_path, monkeypatch):
+    """A load whose commit fails after its data files are written leaves
+    the log and the cursor as they were; the re-run loads the batch once."""
+    wh = str(tmp_path / "wh")
+    _load(spark, [(1, "2024-01-01"), (2, "2024-01-02")], wh, mode="seed")
+    t = TxnTable(spark, wh)
+    v = t.latest_version()
+    batch = [(2, "2024-01-05"), (3, "2024-01-06")]
+
+    def fail(self, directory, name, payload):
+        raise OSError("log store unavailable")
+
+    with monkeypatch.context() as m:
+        m.setattr(FilesystemLogStore, "put_if_absent", fail)
+        with pytest.raises(OSError, match="log store unavailable"):
+            _load(spark, batch, wh)
+    assert t.latest_version() == v and committed_cursor(t) == "2024-01-02"
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, "2024-01-01"), (2, "2024-01-02")]
+
+    res = _load(spark, batch, wh)
+    assert (res.rows_loaded, res.target_rows) == (2, 3)
+    assert committed_cursor(t) == "2024-01-06"
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, "2024-01-01"), (2, "2024-01-05"), (3, "2024-01-06"),
+    ]
+    assert _load(spark, batch, wh).rows_loaded == 0
 
 
 def test_salted_join_rejects_right_preserving_joins(spark):
@@ -206,20 +244,17 @@ def test_sample_frames_chunks_bytes_for_multibyte_text(spark):
     assert got == sorted(want)
 
 
-def test_cursor_advanced_numeric_and_string(spark):
+def test_cursor_advanced_numeric_and_string(spark, tmp_path):
     """Numeric cursors must compare numerically (lexicographic '10'<'9'
     stalled the watermark forever); strings still compare as strings."""
-    from importer_spark.streaming.incremental import (
-        commit_cursor,
-        cursor_advanced,
-        read_cursor,
-    )
-
-    assert cursor_advanced(10, 9)
-    assert not cursor_advanced(9, 10)
-    assert cursor_advanced("2024-02", "2024-01")
-    assert not cursor_advanced(None, 5)
-    assert cursor_advanced(1, None)
+    wh = str(tmp_path / "num")
+    _load(spark, [(1, 9)], wh, mode="seed", schema="id int, updated_at int")
+    res = _load(spark, [(1, 9), (2, 10)], wh, schema="id int, updated_at int")
+    assert res.rows_loaded == 1 and committed_cursor(TxnTable(spark, wh)) == 10
+    wh = str(tmp_path / "str")
+    _load(spark, [(1, "2024-01")], wh, mode="seed")
+    assert _load(spark, [(2, "2024-02")], wh).rows_loaded == 1
+    assert committed_cursor(TxnTable(spark, wh)) == "2024-02"
 
 
 def test_rest_source_numeric_cursor_pagination(spark):
@@ -236,18 +271,6 @@ def test_rest_source_numeric_cursor_pagination(spark):
     src = RestCursorSource(spark, fetch, cursor_field="seq", page_size=3)
     out = sorted(r.id for r in src.load().collect())
     assert out == list(range(995, 1005))
-
-
-def test_merge_by_key_rejects_changed_keys(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    merge_by_key(spark, spark.createDataFrame([Row(k=1, ver=1, v="a")]), path, keys=["k"])
-    with pytest.raises(ValueError, match="created with keys"):
-        merge_by_key(
-            spark,
-            spark.createDataFrame([Row(k=1, ver=2, v="b")]),
-            path,
-            keys=["k", "ver"],
-        )
 
 
 # ---------------------------------------------------------------------------

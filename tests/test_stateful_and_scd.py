@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from importer_spark.io import Tables
 from importer_spark.operators.scd import scd2_apply
 from importer_spark.plans.pipeline import run_source_load
+from importer_spark.txn import TxnTable
 from importer_spark.streaming.stateful import (
     running_user_totals,
     running_user_totals_tws,
@@ -185,7 +186,7 @@ def test_seed_then_incremental_orchestration(spark, tmp_path):
     )
     incr = run_source_load(spark, v2, wh, keys=["id"], cursor_col="updated_at", mode="incremental")
     assert (incr.rows_loaded, incr.target_rows) == (2, 3)
-    final = {r.id: r.val for r in spark.read.parquet(wh).collect()}
+    final = {r.id: r.val for r in TxnTable(spark, wh).read().collect()}
     assert final == {1: "a", 2: "b2", 3: "c"}
     with pytest.raises(ValueError):
         run_source_load(spark, v1, wh, keys=["id"], cursor_col="updated_at", mode="bogus")

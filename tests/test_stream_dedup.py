@@ -147,8 +147,9 @@ def test_streaming_incremental_near_dup_via_foreachbatch(spark, tmp_path):
     against everything seen so far, appends the hits, and merges the batch's
     bands into the store (io.merge_by_key — batch cost, not corpus cost).
     The accumulated pair set must equal the batch answer on the full corpus."""
-    from importer_spark.io import Tables, merge_by_key, read_parquet_if_exists
-    from importer_spark.operators.dedup import band_index, near_dup_pairs, near_dup_pairs_incremental
+    from importer_spark.io import Tables, merge_by_key
+    from importer_spark.operators.dedup import near_dup_pairs, near_dup_pairs_incremental
+    from importer_spark.txn import TxnTable
 
     docs = Tables(spark, SF_DIR).documents.select("doc_id", "lang", "text")
     corpus_path = str(tmp_path / "corpus")
@@ -170,15 +171,17 @@ def test_streaming_incremental_near_dup_via_foreachbatch(spark, tmp_path):
         # corpus grows first so verify can read batch-batch pair content
         batch.write.mode("append").parquet(corpus_path)
         corpus = s.read.parquet(corpus_path)
-        store = read_parquet_if_exists(s, store_path)
-        if store is None:
+        t = TxnTable(s, store_path)
+        if t.latest_version() is None:
             store = s.createDataFrame([], "doc_id bigint, band_idx int, band_key string")
+        else:
+            store = t.read()
         pairs, new_bands = near_dup_pairs_incremental(
             corpus, batch, store.select("doc_id", "band_idx", "band_key"),
             "doc_id", "text",
         )
         pairs.write.mode("append").parquet(pairs_path)
-        merge_by_key(s, new_bands, store_path, keys=["doc_id", "band_idx"], n_buckets=4)
+        merge_by_key(s, new_bands, store_path, keys=["doc_id", "band_idx"])
 
     q = (
         spark.readStream.schema(docs.schema)
@@ -213,11 +216,12 @@ def test_streaming_incremental_substring_via_foreachbatch(spark, tmp_path):
     the LATER doc's spans, not retroactive ones) — so the accumulated
     result must equal the union over waves of the full-batch answer on that
     wave's prefix, restricted to the wave."""
-    from importer_spark.io import Tables, merge_by_key, read_parquet_if_exists
+    from importer_spark.io import Tables, merge_by_key
     from importer_spark.operators.dedup import (
         duplicate_ngram_spans,
         duplicate_ngram_spans_incremental,
     )
+    from importer_spark.txn import TxnTable
 
     docs = Tables(spark, SF_DIR).documents.select("doc_id", "lang", "text")
     store_path = str(tmp_path / "gram_store")
@@ -233,11 +237,13 @@ def test_streaming_incremental_substring_via_foreachbatch(spark, tmp_path):
     def process_batch(batch_df, batch_id):
         s = batch_df.sparkSession
         batch = batch_df.localCheckpoint(eager=True)
-        store = read_parquet_if_exists(s, store_path)
-        if store is None:
+        t = TxnTable(s, store_path)
+        if t.latest_version() is None:
             store = s.createDataFrame(
                 [], "_k1 bigint, _k2 bigint, n_docs int, solo_id bigint"
             )
+        else:
+            store = t.read()
         spans, delta = duplicate_ngram_spans_incremental(
             batch, store.select("_k1", "_k2", "n_docs", "solo_id"),
             "doc_id", "text",
@@ -251,7 +257,7 @@ def test_streaming_incremental_substring_via_foreachbatch(spark, tmp_path):
             store.join(delta.select("_k1", "_k2"), ["_k1", "_k2"], "left_semi"),
             delta,
         )
-        merge_by_key(s, merged_delta, store_path, keys=["_k1", "_k2"], n_buckets=4)
+        merge_by_key(s, merged_delta, store_path, keys=["_k1", "_k2"])
 
     q = (
         spark.readStream.schema(docs.schema)
